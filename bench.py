@@ -74,6 +74,15 @@ def _noisy_queries(timings: dict) -> set:
     return noisy
 
 
+# JSON chars of the compact line's "errors" dict (of the 1800-char
+# line): ~5 truncated messages, the rest reported only in n_errors.
+_ERRORS_BUDGET = 400
+
+
+def _json_len(obj) -> int:
+    return len(json.dumps(obj, separators=(",", ":")))
+
+
 def _compact_record(full: dict, timings: dict, errors: dict) -> dict:
     """The FINAL printed line, guaranteed to fit the 2000-char tail
     capture: same metric/value/errors/sf as the full record, "queries"
@@ -116,25 +125,25 @@ def _compact_record(full: dict, timings: dict, errors: dict) -> dict:
         compact["superlinear_vs_sibling"] = sls_c
     # errors must be bounded too (each message is up to 500 chars —
     # four failures would alone overflow the tail capture): keep 60
-    # chars per message, and if the error dict is still what overflows,
-    # shrink it name by name below.
-    compact["errors"] = {n: m[:60] for n, m in errors.items()}
-    slowest = sorted(timings.items(), key=lambda kv: -kv[1])
+    # chars per message within a fixed sub-budget, set BEFORE the query
+    # keep-loop so no error count can evict the timings.  n_errors
+    # still records the full count.
+    kept_errors: dict = {}
+    for name, msg in sorted(errors.items()):
+        kept_errors[name] = msg[:60]
+        if _json_len(kept_errors) > _ERRORS_BUDGET:
+            del kept_errors[name]
+            break
+    compact["errors"] = kept_errors
     kept: dict = {}
-    for name, secs in slowest:
+    compact["queries"] = kept
+    compact["queries_truncated"] = False
+    for name, secs in sorted(timings.items(), key=lambda kv: -kv[1]):
         kept[name] = round(secs, 2)
-        compact["queries"] = kept
-        compact["queries_truncated"] = len(kept) < len(timings)
-        if len(json.dumps(compact, separators=(",", ":"))) > 1800:
+        if _json_len(compact) > 1800:
             del kept[name]
-            compact["queries"] = kept
             compact["queries_truncated"] = True
             break
-    err_names = sorted(compact["errors"], key=lambda n: -len(compact["errors"][n]))
-    for name in err_names:
-        if len(json.dumps(compact, separators=(",", ":"))) <= 1800:
-            break
-        del compact["errors"][name]  # n_errors still records the count
     return compact
 
 

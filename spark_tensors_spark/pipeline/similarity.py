@@ -49,12 +49,7 @@ def _group_spread(df: DataFrame, key: str) -> DataFrame:
     ClusteredDistribution, so no second exchange appears; sized by
     defaultParallelism it scales with the cluster, never a constant.
     Per-group results are partitioning-invariant, so output values are
-    unchanged.  ``SPARK_GRAFT_GROUP_SPREAD=0`` restores the bare
-    groupBy (the A/B escape hatch, read per call)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_GROUP_SPREAD", "1") == "0":
-        return df
+    unchanged."""
     return df.repartition(
         df.sparkSession.sparkContext.defaultParallelism, key
     )

@@ -11,8 +11,8 @@ the bilinear RESCAL score sᵀWₚo of `kge/hole.py:145-147` / keras
 `hole.py:22-42` (the reference's margin-ranking objective, margin
 configs at `kge/hole.py:459`).
 
-Scoring kernels (r14 optimization): the per-row O(dim²) score /
-backward vectors are computed by an Arrow-vectorized numpy kernel
+Scoring kernels: the per-row O(dim²) score / backward vectors of
+each model are computed by one Arrow-vectorized numpy kernel
 (``mapInPandas`` over the gathered rows — whole int64 batches through
 BLAS-free numpy C loops; guide §4.2), because Spark's higher-order
 array functions (``aggregate``/``transform``/``zip_with``) do not
@@ -21,12 +21,12 @@ interpreted, and the kge bench family spent its time there (measured;
 the expression-tree unroll alternative was measured WORSE, see
 OPTIMIZATION_r14.md).  numpy int64 arithmetic has Java-long wrap
 semantics, and every value in these kernels is magnitude-bounded far
-below 2⁶³ (ternary / ±6 inits), so the results are bit-identical to
-the SQL higher-order form — which is retained as
-``SPARK_GRAFT_EXACTSTEP_KERNEL=sql`` and equality-pinned against the
-arrow path in tests/test_exactstep.py.  Everything around the kernel —
-margin filter, gradient explode, segment-sum, join-merge update — stays
-pure JVM codegen.
+below 2⁶³ (ternary / ±6 inits), so the kernels are exact; every
+parameter slot of each step is pinned against a gradient-checked
+numpy reference in tests/test_exactstep.py.  The batch plumbing all
+three share lives in ``_score_batches``.  Everything around the
+kernel — margin filter, gradient explode, segment-sum, join-merge
+update — stays pure JVM codegen.
 
 Why integers: on integer embeddings the L1 distance (TransE), the
 bilinear form (RESCAL), the circular-correlation score (HolE), the
@@ -51,32 +51,10 @@ float trainer, with no collect anywhere.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# "arrow" (default): numpy batch kernels via mapInPandas — the fast
-# path.  "sql": the original higher-order-function column expressions —
-# interpreted (no codegen for HOF lambdas) but JVM-only; kept for
-# equivalence pinning and as an escape hatch.  Read per call (ADVICE
-# r14: the import-time read silently ignored env changes made after
-# import, a footgun for the documented escape hatch).
-def _kernel_mode() -> str:
-    return os.environ.get("SPARK_GRAFT_EXACTSTEP_KERNEL", "arrow")
-
-
-def _isign(col):
-    """Integer sign in {-1, 0, 1} as BIGINT (F.signum returns DOUBLE)."""
-    return (
-        F.when(col > 0, F.lit(1))
-        .when(col < 0, F.lit(-1))
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-
 
 def _gather_joined(
     triples: DataFrame,
@@ -105,6 +83,34 @@ _IDS = ["s_id", "p_id", "o_id", "n_id"]
 def _stack(pdf: pd.DataFrame, col: str) -> np.ndarray:
     """(n, d) int64 matrix from a pandas column of int arrays."""
     return np.stack(pdf[col].to_numpy()).astype(np.int64, copy=False)
+
+
+def _score_batches(
+    g: DataFrame, ins: list[str], kernel, out_schema: str
+) -> DataFrame:
+    """Run a numpy scoring ``kernel`` over the gathered rows, one Arrow
+    batch at a time — the single site of the batch format.  The kernel
+    takes one (n, d) int64 matrix per ``ins`` column and returns a dict
+    of output columns (2-D matrices become array columns, 1-D vectors
+    scalar columns), typed by ``out_schema``; the ``_IDS`` key columns
+    pass through unchanged."""
+
+    def batch(it):
+        for pdf in it:
+            if not len(pdf):
+                continue
+            out = kernel(*(_stack(pdf, c) for c in ins))
+            yield pd.DataFrame(
+                {
+                    **{c: pdf[c].to_numpy() for c in _IDS},
+                    **{k: list(v) if v.ndim == 2 else v
+                       for k, v in out.items()},
+                }
+            )
+
+    return g.select(*_IDS, *ins).mapInPandas(
+        batch, "s_id long, p_id long, o_id long, n_id long, " + out_schema
+    )
 
 
 def _np_ccorr(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -139,48 +145,22 @@ def _gather_and_score(
     of the differences the backward pass needs) and raw_loss the raw
     margin loss, exact BIGINT."""
     g = _gather_joined(triples, entity_emb, relation_emb, n_entities, "pv")
-    if _kernel_mode() == "arrow":
-        def batch(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                s = _stack(pdf, "sv")
-                sp_ = s + _stack(pdf, "pv")
-                dp = sp_ - _stack(pdf, "ov")
-                dn = sp_ - _stack(pdf, "nv")
-                yield pd.DataFrame(
-                    {
-                        **{c: pdf[c].to_numpy() for c in _IDS},
-                        "sp": list(np.sign(dp)),
-                        "sn": list(np.sign(dn)),
-                        "raw_loss": margin
-                        + np.abs(dp).sum(axis=1)
-                        - np.abs(dn).sum(axis=1),
-                    }
-                )
 
-        return g.select(*_IDS, "sv", "pv", "ov", "nv").mapInPandas(
-            batch,
-            "s_id long, p_id long, o_id long, n_id long, "
-            "sp array<long>, sn array<long>, raw_loss long",
-        )
+    def kernel(s, p, o, nv):
+        sp_ = s + p
+        dp = sp_ - o
+        dn = sp_ - nv
+        return {
+            "sp": np.sign(dp),
+            "sn": np.sign(dn),
+            "raw_loss": margin
+            + np.abs(dp).sum(axis=1)
+            - np.abs(dn).sum(axis=1),
+        }
 
-    dp = F.zip_with(
-        F.zip_with("sv", "pv", lambda a, b: a + b), "ov", lambda a, b: a - b
-    )
-    dn = F.zip_with(
-        F.zip_with("sv", "pv", lambda a, b: a + b), "nv", lambda a, b: a - b
-    )
-    zero = F.lit(0).cast("long")
-    l1 = lambda arr: F.aggregate(  # noqa: E731 — local plumbing
-        F.transform(arr, lambda x: F.abs(x)), zero, lambda acc, x: acc + x
-    )
-    sgn = lambda arr: F.transform(arr, _isign)  # noqa: E731
-    return g.select(
-        *_IDS,
-        sgn(dp).alias("sp"),
-        sgn(dn).alias("sn"),
-        (F.lit(margin) + l1(dp) - l1(dn)).alias("raw_loss"),
+    return _score_batches(
+        g, ["sv", "pv", "ov", "nv"], kernel,
+        "sp array<long>, sn array<long>, raw_loss long",
     )
 
 
@@ -284,70 +264,6 @@ def transe_l1_sgd_step(
     if as_tables:
         return _merge_update_tables(params, grads, dim, lr, hint)
     return _merge_update(params, grads, dim, lr, hint)
-
-
-def _dseq(dim: int):
-    return F.sequence(F.lit(0), F.lit(dim - 1))
-
-
-def _dot(a, b):
-    zero = F.lit(0).cast("long")
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), zero, lambda acc, x: acc + x
-    )
-
-
-def _matvec(w, x, dim: int, transpose: bool = False):
-    """(W·x)ᵢ = Σⱼ w[i·d+j]·xⱼ (row-major flat W; Wᵀ·x when
-    ``transpose``) as a pure codegen array expression on BIGINT."""
-    zero = F.lit(0).cast("long")
-
-    def flat(i, j):
-        return (j * dim + i) if transpose else (i * dim + j)
-
-    return F.transform(
-        _dseq(dim),
-        lambda i: F.aggregate(
-            _dseq(dim),
-            zero,
-            lambda acc, j: acc
-            + F.element_at(w, (flat(i, j) + 1).cast("int"))
-            * F.element_at(x, (j + 1).cast("int")),
-        ),
-    )
-
-
-def _ccorr_cols(a, b, dim: int):
-    """ccorr(a,b)ₖ = Σᵢ aᵢ·b₍ᵢ₊ₖ₎ mod d — the circular correlation of
-    `hole.py:19-20` by its index algebra (exact on integers; the FFT
-    form in functions/kernels.py computes the same sums)."""
-    zero = F.lit(0).cast("long")
-    return F.transform(
-        _dseq(dim),
-        lambda k: F.aggregate(
-            _dseq(dim),
-            zero,
-            lambda acc, i: acc
-            + F.element_at(a, (i + 1).cast("int"))
-            * F.element_at(b, (((i + k) % dim) + 1).cast("int")),
-        ),
-    )
-
-
-def _cconv_cols(a, b, dim: int):
-    """cconv(a,b)ₖ = Σᵢ aᵢ·b₍ₖ₋ᵢ₎ mod d (k−i+d ≥ 0 for k,i ∈ [0,d), so
-    plain % is the mathematical mod here)."""
-    zero = F.lit(0).cast("long")
-    return F.transform(
-        _dseq(dim),
-        lambda k: F.aggregate(
-            _dseq(dim),
-            zero,
-            lambda acc, i: acc
-            + F.element_at(a, (i + 1).cast("int"))
-            * F.element_at(b, (((k - i + dim) % dim) + 1).cast("int")),
-        ),
-    )
 
 
 def _with_negative(triples: DataFrame, n_entities: int) -> DataFrame:
@@ -547,73 +463,27 @@ def _rescal_gather_score(
     ever used, move the gw build behind the raw_loss > 0 filter (a
     second small mapInPandas over violations only)."""
     g = _gather_joined(triples, entity_emb, rel_w, n_entities, "wv")
-    if _kernel_mode() == "arrow":
-        def batch(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                s = _stack(pdf, "sv")
-                o = _stack(pdf, "ov")
-                nv = _stack(pdf, "nv")
-                w3 = _stack(pdf, "wv").reshape(len(pdf), dim, dim)
-                up = np.einsum("nij,nj->ni", w3, o)
-                un = np.einsum("nij,nj->ni", w3, nv)
-                vv = np.einsum("nij,ni->nj", w3, s)
-                gw = (s[:, :, None] * (nv - o)[:, None, :]).reshape(
-                    len(pdf), dim * dim
-                )
-                yield pd.DataFrame(
-                    {
-                        **{c: pdf[c].to_numpy() for c in _IDS},
-                        "up": list(up),
-                        "un": list(un),
-                        "vv": list(vv),
-                        "gw": list(gw),
-                        "raw_loss": margin
-                        - (s * up).sum(axis=1)
-                        + (s * un).sum(axis=1),
-                    }
-                )
 
-        return g.select(*_IDS, "sv", "wv", "ov", "nv").mapInPandas(
-            batch,
-            "s_id long, p_id long, o_id long, n_id long, "
-            "up array<long>, un array<long>, vv array<long>, "
-            "gw array<long>, raw_loss long",
-        )
-
-    gw = F.flatten(
-        F.transform(
-            _dseq(dim),
-            lambda i: F.transform(
-                _dseq(dim),
-                lambda j: F.element_at(F.col("sv"), (i + 1).cast("int"))
-                * (
-                    F.element_at(F.col("nv"), (j + 1).cast("int"))
-                    - F.element_at(F.col("ov"), (j + 1).cast("int"))
-                ),
+    def kernel(s, wv, o, nv):
+        w3 = wv.reshape(-1, dim, dim)
+        up = np.einsum("nij,nj->ni", w3, o)
+        un = np.einsum("nij,nj->ni", w3, nv)
+        return {
+            "up": up,
+            "un": un,
+            "vv": np.einsum("nij,ni->nj", w3, s),
+            "gw": (s[:, :, None] * (nv - o)[:, None, :]).reshape(
+                -1, dim * dim
             ),
-        )
-    )
-    g = g.select(
-        *_IDS,
-        "sv",
-        _matvec(F.col("wv"), F.col("ov"), dim).alias("up"),
-        _matvec(F.col("wv"), F.col("nv"), dim).alias("un"),
-        _matvec(F.col("wv"), F.col("sv"), dim, transpose=True).alias("vv"),
-        gw.alias("gw"),
-    )
-    return g.select(
-        *_IDS,
-        "up",
-        "un",
-        "vv",
-        "gw",
-        (
-            F.lit(margin)
-            - _dot(F.col("sv"), F.col("up"))
-            + _dot(F.col("sv"), F.col("un"))
-        ).alias("raw_loss"),
+            "raw_loss": margin
+            - (s * up).sum(axis=1)
+            + (s * un).sum(axis=1),
+        }
+
+    return _score_batches(
+        g, ["sv", "wv", "ov", "nv"], kernel,
+        "up array<long>, un array<long>, vv array<long>, "
+        "gw array<long>, raw_loss long",
     )
 
 
@@ -732,60 +602,24 @@ def _hole_gather_score(
     cn = ccorr(s,o⁻), gs = ccorr(r,o⁻) − ccorr(r,o⁺) (the subject
     gradient) and cv = cconv(s,r) (±the object gradients)."""
     g = _gather_joined(triples, entity_emb, relation_emb, n_entities, "rv")
-    if _kernel_mode() == "arrow":
-        def batch(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                s = _stack(pdf, "sv")
-                r = _stack(pdf, "rv")
-                o = _stack(pdf, "ov")
-                nv = _stack(pdf, "nv")
-                cp = _np_ccorr(s, o)
-                cn = _np_ccorr(s, nv)
-                yield pd.DataFrame(
-                    {
-                        **{c: pdf[c].to_numpy() for c in _IDS},
-                        "cp": list(cp),
-                        "cn": list(cn),
-                        "gs": list(_np_ccorr(r, nv) - _np_ccorr(r, o)),
-                        "cv": list(_np_cconv(s, r)),
-                        "raw_loss": margin
-                        - (r * cp).sum(axis=1)
-                        + (r * cn).sum(axis=1),
-                    }
-                )
 
-        return g.select(*_IDS, "sv", "rv", "ov", "nv").mapInPandas(
-            batch,
-            "s_id long, p_id long, o_id long, n_id long, "
-            "cp array<long>, cn array<long>, gs array<long>, "
-            "cv array<long>, raw_loss long",
-        )
+    def kernel(s, r, o, nv):
+        cp = _np_ccorr(s, o)
+        cn = _np_ccorr(s, nv)
+        return {
+            "cp": cp,
+            "cn": cn,
+            "gs": _np_ccorr(r, nv) - _np_ccorr(r, o),
+            "cv": _np_cconv(s, r),
+            "raw_loss": margin
+            - (r * cp).sum(axis=1)
+            + (r * cn).sum(axis=1),
+        }
 
-    g = g.select(
-        *_IDS,
-        "rv",
-        _ccorr_cols(F.col("sv"), F.col("ov"), dim).alias("cp"),
-        _ccorr_cols(F.col("sv"), F.col("nv"), dim).alias("cn"),
-        F.zip_with(
-            _ccorr_cols(F.col("rv"), F.col("nv"), dim),
-            _ccorr_cols(F.col("rv"), F.col("ov"), dim),
-            lambda a, b: a - b,
-        ).alias("gs"),
-        _cconv_cols(F.col("sv"), F.col("rv"), dim).alias("cv"),
-    )
-    return g.select(
-        *_IDS,
-        "cp",
-        "cn",
-        "gs",
-        "cv",
-        (
-            F.lit(margin)
-            - _dot(F.col("rv"), F.col("cp"))
-            + _dot(F.col("rv"), F.col("cn"))
-        ).alias("raw_loss"),
+    return _score_batches(
+        g, ["sv", "rv", "ov", "nv"], kernel,
+        "cp array<long>, cn array<long>, gs array<long>, "
+        "cv array<long>, raw_loss long",
     )
 
 

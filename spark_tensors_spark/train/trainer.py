@@ -306,30 +306,34 @@ class KGETrainer:
         pname = "W" if self.model == "rescal" else "R"
         return {"E": self.dim, pname: pw, "_loss": 1}
 
-    def fit(self, triples: DataFrame, epochs: int = 5) -> "KGETrainer":
-        import os
+    @staticmethod
+    def _driver_merge(triples: DataFrame) -> bool:
+        """Gate of fit()'s driver-merge fast path (guide §5 — these
+        smokes are dominated by per-epoch plan/shuffle constants, not
+        data): on a ≤2-partition cached triple frame, each epoch's
+        gradient partials are fused to ONE frame per task, collected,
+        and merged on the driver, skipping the per-epoch groupBy plan
+        + shuffle.  Wider frames (e.g. the FB15k golden) keep the
+        Spark aggregate.
 
+        The exactness argument needs few partials per key in the
+        per-epoch ROWS frame; the gate reads the TRIPLES frame (asking
+        the rows frame for its partitions can start extra jobs under
+        AQE).  Pairwise rows derive from the triples by narrow
+        operators: ≤2 partials per (param, id) key, and two-float IEEE
+        addition commutes, so the merge is bit-identical.  Pointwise
+        rows add ``_reject_known``'s left-anti join (kg/sampling.py)
+        and a pos∪neg union: the ≤4-partials bound (re-association at
+        double precision) holds only while that anti-join broadcasts,
+        as it does at smoke scale.  Nothing here enforces it — the
+        1e-12 parity test against the Spark aggregate
+        (tests/test_training.py) is what pins it."""
+        return triples.rdd.getNumPartitions() <= 2
+
+    def fit(self, triples: DataFrame, epochs: int = 5) -> "KGETrainer":
         triples = triples.select("s_id", "p_id", "o_id").cache()
         triples.count()
-        # Driver-merge fast path (guide §5 — these smokes are dominated
-        # by per-epoch plan/shuffle constants, not data): when the
-        # cached triple frame has ≤2 partitions, each epoch's gradient
-        # partials are fused to ONE frame per task, collected directly,
-        # and merged on the driver — skipping the wide per-epoch
-        # groupBy plan + shuffle + extra AQE jobs.  Exactness: with
-        # fused partials each (param, id) key holds ≤2 values on the
-        # pairwise path (IEEE addition of two floats is commutative, so
-        # the merge is bit-identical to the Spark aggregate) and ≤4 on
-        # the pointwise pos∪neg union (re-association at double
-        # precision; the 6-dp golden pins in tests/test_mlops_queries
-        # and the trainer parity suite gate it).  Larger frames (e.g.
-        # the FB15k golden at 4 partitions × many Arrow batches) keep
-        # the Spark aggregate path untouched.
-        # SPARK_GRAFT_TRAINER_AGG=spark restores the aggregate path.
-        driver_merge = (
-            os.environ.get("SPARK_GRAFT_TRAINER_AGG", "driver") != "spark"
-            and triples.rdd.getNumPartitions() <= 2
-        )
+        driver_merge = self._driver_merge(triples)
         for epoch in range(epochs):
             rows = self._training_rows(triples, epoch)
             contrib, bc = self._epoch_gradients(

@@ -98,3 +98,30 @@ def test_compact_line_small_run_untruncated():
     assert compact["queries_truncated"] is False
     assert len(compact["queries"]) == 10
     assert compact["run_policy"]["noisy_min_of_2_count"] == 0
+
+
+def test_compact_line_many_errors_keep_queries():
+    # ~20 failures: the error dict has a fixed sub-budget, so it can
+    # never push every query timing off the line
+    full, timings = _r14_like_full()
+    errors = {f"broken_query_{i:02d}": "E" * 500 for i in range(20)}
+    full["errors"] = errors
+    compact = _compact_record(full, timings, errors)
+    line = json.dumps(compact, separators=(",", ":"))
+    assert len(line) <= 1800
+    assert len(compact["queries"]) >= 10
+    assert compact["n_errors"] == 20
+    assert 0 < len(compact["errors"]) < 20
+
+
+def test_compact_line_shape_without_timings():
+    # an all-errored run has the same record shape as a normal one
+    full, _ = _r14_like_full(n_queries=0, n_noisy=0)
+    errors = {f"broken_query_{i}": "X" * 100 for i in range(3)}
+    full["errors"] = errors
+    empty = _compact_record(full, {}, errors)
+    assert empty["queries"] == {}
+    assert empty["queries_truncated"] is False
+    assert empty["n_queries"] == 0
+    full2, timings = _r14_like_full(n_queries=5, n_noisy=0)
+    assert set(empty) == set(_compact_record(full2, timings, {}))

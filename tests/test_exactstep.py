@@ -504,56 +504,3 @@ def test_as_tables_chain_equals_rebuild_chain(spark, fixtures, model):
         if k[0] == pkind or k[1] % 3 == 0
     }
     assert got_rows == want_rows
-
-
-@pytest.mark.parametrize("model", ["transe", "rescal", "hole"])
-def test_arrow_kernel_equals_sql_kernel(spark, fixtures, model, monkeypatch):
-    """r14 kernel swap: the Arrow/numpy scoring kernel (default) and
-    the SQL higher-order-function kernel (`SPARK_GRAFT_EXACTSTEP_KERNEL
-    =sql`) produce bit-identical scored frames AND step outputs — the
-    optimization changes the evaluator, never a value."""
-    from spark_tensors_spark.train import exactstep as es
-
-    triples, tri, E, R = fixtures
-    if model == "transe":
-        gather = lambda: es._gather_and_score(tri, E, R, N_ENT, MARGIN)  # noqa: E731
-        step = lambda: es.transe_l1_sgd_step(  # noqa: E731
-            tri, E, R, dim=DIM, n_entities=N_ENT, margin=MARGIN, lr=LR
-        )
-    elif model == "rescal":
-        W = _spark_w(spark)
-        gather = lambda: es._rescal_gather_score(  # noqa: E731
-            tri, E, W, DIM, N_ENT, R_MARGIN
-        )
-        step = lambda: es.rescal_bilinear_sgd_step(  # noqa: E731
-            tri, E, W, dim=DIM, n_entities=N_ENT, margin=R_MARGIN, lr=1.0
-        )
-    else:
-        gather = lambda: es._hole_gather_score(  # noqa: E731
-            tri, E, R, DIM, N_ENT, R_MARGIN
-        )
-        step = lambda: es.hole_ccorr_sgd_step(  # noqa: E731
-            tri, E, R, dim=DIM, n_entities=N_ENT, margin=R_MARGIN, lr=1.0
-        )
-
-    out = {}
-    for mode in ("arrow", "sql"):
-        # the switch is env-read per call since r15 (ADVICE r14 fix) —
-        # setting the variable mid-session is the supported toggle
-        monkeypatch.setenv("SPARK_GRAFT_EXACTSTEP_KERNEL", mode)
-        sc = gather()
-        key = [c for c in ("s_id", "p_id", "o_id", "n_id")]
-        out[mode] = (
-            sorted(
-                (tuple(r[c] for c in key),
-                 tuple(tuple(v) if isinstance(v, list) else v
-                       for c, v in r.asDict().items() if c not in key))
-                for r in sc.collect()
-            ),
-            sorted(
-                (r.kind, r.id, r.d, r.old_val, r.grad, r.new_val)
-                for r in step().collect()
-            ),
-        )
-    assert out["arrow"][0] == out["sql"][0], "scored frames differ"
-    assert out["arrow"][1] == out["sql"][1], "step outputs differ"

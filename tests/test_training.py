@@ -334,21 +334,25 @@ def test_driver_merge_matches_spark_agg(
 ):
     """fit()'s driver-merge fast path (≤2-partition frames collect the
     fused per-task gradient partials and merge on the driver) against
-    the Spark segment-sum aggregate it replaces.  Pairwise on ≤2
-    partitions is provably bit-exact (≤2 partials per key → float
-    addition commutes); the pointwise pos∪neg union re-associates the
-    partial sums, pinned here to 1e-12."""
+    the Spark segment-sum aggregate it replaces, each side forced
+    through the ``_driver_merge`` gate.  Pairwise on ≤2 partitions is
+    provably bit-exact (≤2 partials per key → float addition
+    commutes); the pointwise pos∪neg union re-associates the partial
+    sums, pinned here to 1e-12."""
     dim = 6 if model == "rescal" else 8
     tri = kg_triples.coalesce(2)
 
-    def _fit(agg):
-        monkeypatch.setenv("SPARK_GRAFT_TRAINER_AGG", agg)
+    def _fit(driver_merge):
+        monkeypatch.setattr(
+            KGETrainer, "_driver_merge",
+            staticmethod(lambda triples: driver_merge),
+        )
         return KGETrainer(
             spark, n_entities=40, n_relations=2, dim=dim, model=model,
             optimizer=AdaGrad(lr=0.2), seed=31, neg_per_pos=2,
         ).fit(tri, epochs=3)
 
-    a, b = _fit("driver"), _fit("spark")
+    a, b = _fit(True), _fit(False)
     if objective == "pairwise":
         np.testing.assert_array_equal(a.E, b.E)
         assert a.loss_history == b.loss_history
