@@ -6,17 +6,14 @@ Usage: python scripts/sweep.py [sf_dir] [name_filter_substr]
 import os, sys, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-from pyspark.sql import SparkSession
+from spark_tensors_spark.session import get_session
 
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     filt = sys.argv[2] if len(sys.argv) > 2 else ""
-    spark = (SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS','32')}]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.ui.enabled", "false")
-             .config("spark.driver.memory", "48g")
-             .config("spark.sql.adaptive.enabled", "true")
-             .getOrCreate())
+    # the console progress bar writes "[Stage N:>" onto the result lines
+    spark = get_session(app_name="oracle-sweep",
+                        extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as e
     from tests.oracle_harness import compare, duck_connection

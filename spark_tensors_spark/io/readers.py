@@ -6,7 +6,14 @@ S1/S2  N-Triples scan  — reference: Jena/rdflib per-partition parsing
        all, fully pushed into whole-stage codegen.
 S3/S4  TSV triple scan — reference: `TransE.scala:73-94`.  Here:
        `spark.read.csv(sep='\t')` with an explicit schema.
-Parquet star schema   — driver testdata (TESTDATA.md).
+Parquet star schema   — driver testdata (TESTDATA.md).  Nine of the ten
+       tables are read with the declared schema in ``TABLE_SCHEMAS``: the
+       types Spark infers from the driver's files (identical at sf0.001,
+       sf0.01, sf0.1 and in ``scripts/gen_scale.py`` output — pinned by
+       tests/test_io_readers.py).  Declaring it skips parquet schema
+       inference, a footer-reading Spark job on every read.  ``events``
+       keeps inference: its ``ts`` column has shipped in two physical
+       layouts, and the read has to see which one to normalize it.
 
 All readers return DataFrames with fixed, named schemas (the reference's
 positional-tuple schemas were inconsistent across files — SURVEY §1.3).
@@ -32,6 +39,26 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+TABLE_SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, "
+    "c_acctbal double, c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, "
+    "s_acctbal double",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, "
+    "p_size int, p_retailprice double",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+    "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
+    "l_linenumber int, l_quantity double, l_extendedprice double, "
+    "l_discount double, l_tax double, l_returnflag string, "
+    "l_linestatus string, l_shipdate timestamp_ntz",
+    "documents": "doc_id bigint, text string, lang string, source string, "
+    "n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
 
 # N-Triples line: <s> <p> <o> .   |   <s> <p> "literal" .
 # The reference keeps URI-only triples (`RDFDatasetReader.scala:22-25`);
@@ -64,7 +91,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif isinstance(ts_type, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
 
 
 def ensure_scan_parallelism(df: DataFrame, min_partitions: int = 0) -> DataFrame:

@@ -1,6 +1,7 @@
-"""Distributed graph analytics over edge lists: triangle counting and
-PageRank — the graph-shaped workloads a KG engine's users run next to
-link prediction (degree analytics already live in `kg_salted_degree`).
+"""Distributed graph analytics over edge lists: triangle counting,
+PageRank, k-core peeling, label propagation and their relatives — the
+graph-shaped workloads a KG engine's users run next to link prediction
+(degree analytics already live in `kg_salted_degree`).
 
 Scale design
 ------------
@@ -25,14 +26,28 @@ nodes (no out-edges) keep the base (1-d)/N term only — the simplified
 variant every fixed-iteration oracle can reproduce; rank mass is not
 renormalized per round.
 
-Both operators take an explicit edge DataFrame, so any query-layer
+**k-core peeling and label propagation** are Pregel-style
+message-passing rounds (Malewicz et al., SIGMOD 2010) over the directed
+edge frame ``(x, y, state-of-y)``, both directions of every undirected
+edge.  A round is one hash exchange on ``x`` and one window pass over
+``x``'s rows, which reads the neighbors' states and computes x's new
+one; the columns are then swapped so the next exchange carries x's
+state to its partners.  The rounds chain lazily, with no per-round
+aggregate, join, ``localCheckpoint`` or driver action: the whole loop is
+one plan holding the input distinct, one exchange per round and (for
+k-core) the final degree count, run by the caller's action.  The plan
+grows by one window layer per round, linear like PageRank's, which is
+cheap at the fixed round counts these operators take.
+
+All operators take an explicit edge DataFrame, so any query-layer
 graph (KG adjacency, co-occurrence, LSH candidate pairs) plugs in.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def undirect_edges(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
@@ -46,6 +61,27 @@ def undirect_edges(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFram
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
+
+
+def _messages(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both directions of every undirected simple edge, as (x, y): the
+    frame a message-passing round exchanges on ``x``."""
+    u, v = F.col("u"), F.col("v")
+    both = F.array(
+        F.struct(u.alias("x"), v.alias("y")),
+        F.struct(v.alias("x"), u.alias("y")),
+    )
+    return (
+        undirect_edges(edges, src, dst)
+        .select(F.explode(both).alias("m"))
+        .select("m.x", "m.y")
+    )
+
+
+def _swap(rows: DataFrame, state: Column) -> DataFrame:
+    """End of a round: reverse each edge so ``state``, computed for
+    ``x``, travels to its partner on the next exchange."""
+    return rows.select(F.col("y").alias("x"), F.col("x").alias("y"), state)
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -183,42 +219,31 @@ def label_propagation(
     random-order LPA is not reproducible across engines; fixed-point
     synchronous rounds with an integer-count argmax are).
 
-    Per round: one join keyed on the node id + one (node, label) count
-    aggregate + one windowed argmax partitioned by node — the same
-    shuffle shape as a PageRank round; the label frame is
-    ``localCheckpoint``-ed so plans stay O(1) deep.  Returns
+    Runs as message-passing rounds over the directed edge frame
+    ``(x, y, lab)``, ``lab`` = the current label of ``y`` (see the
+    module's "Scale design"): per round one exchange on ``x``, the
+    votes for each label counted over ``x``'s rows ordered by ``lab``
+    (a ``rangeBetween(0, 0)`` frame: the rows sharing ``lab``), and
+    the argmax ``min(struct(-votes, lab))`` over ``x``'s rows.  Returns
     DataFrame(node, label) after ``iterations`` rounds.
     """
-    from pyspark.sql.window import Window
-
-    e = undirect_edges(edges, src, dst)
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
+    msgs = _messages(edges, src, dst).select(
+        "x", "y", F.col("y").alias("lab")
     )
-    w = Window.partitionBy("node").orderBy(
-        F.col("c").desc(), F.col("label").asc()
-    )
+    peers = Window.partitionBy("x").orderBy("lab").rangeBetween(0, 0)
+    node = Window.partitionBy("x")
+    best = F.min(F.struct(-F.col("_votes"), F.col("lab"))).over(node)
     for _ in range(iterations):
-        votes = (
-            sym.join(
-                labels.select(F.col("node").alias("u"), "label"), "u"
-            )
-            .groupBy(F.col("v").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            votes.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select("node", "label")
-            .localCheckpoint()
-        )
-    return labels
+        voted = msgs.withColumn(
+            "_votes", F.count(F.lit(1)).over(peers)
+        ).withColumn("_new", best["lab"])
+        msgs = _swap(voted, F.col("_new").alias("lab"))
+    # every row of y carries y's label; after a round the frame is still
+    # partitioned on y (the last exchange's key), so the distinct adds
+    # no exchange
+    return msgs.select(
+        F.col("y").alias("node"), F.col("lab").alias("label")
+    ).distinct()
 
 
 def common_neighbor_scores(
@@ -242,8 +267,8 @@ def common_neighbor_scores(
     bounds the blow-up at cap²·nodes while keeping the informative
     wedges.
     """
-    # materialized once like triangle_counts/kcore_peel: both wedge
-    # sides AND the closing anti-join scan e, and without a barrier
+    # materialized once like triangle_counts: both wedge sides AND
+    # the closing anti-join scan e, and without a barrier
     # each reference re-runs the full upstream edge derivation (the
     # co-purchase build is 2 scans + a self-join + 2 distincts —
     # graph_link_prediction's plan carried 40 parquet scans, 0 reused)
@@ -283,30 +308,38 @@ def kcore_peel(
     standard "dense enough to matter" filter before community/embedding
     work on web-scale graphs.
 
-    Per round: one degree aggregate + two semi-joins restricting the
-    edge list to surviving endpoints — all equi-shuffles on node ids,
-    edge frame localCheckpointed so plans stay O(1) deep.  Returns
-    DataFrame(node, degree) for nodes surviving ``rounds`` peels, with
-    their degree in the peeled subgraph.
+    Runs as message-passing rounds over the directed edge frame
+    ``(x, y, ok)`` (see the module's "Scale design").  Entering round
+    r ≥ 1 the frame holds the edges whose endpoints both survived
+    r − 1 peels, and ``ok`` is non-null iff ``y`` survives r.  One
+    window over ``x``'s rows gives ``count(*)``, x's degree a peel
+    earlier (so whether x survives r), and ``count(ok)``, x's degree
+    among r-survivors (so whether x survives r + 1).  Rows whose both
+    endpoints survive r are swapped to carry x's new flag to ``y``.
+    Returns DataFrame(node, degree) for nodes surviving ``rounds``
+    peels, with their degree in the peeled subgraph.
     """
-    e = undirect_edges(edges, src, dst).localCheckpoint()
-    for _ in range(rounds):
-        sym = e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("_d"))
-        keep = deg.filter(F.col("_d") >= k).select(F.col("u").alias("node"))
-        e = (
-            e.join(keep.select(F.col("node").alias("u")), "u", "left_semi")
-            .join(keep.select(F.col("node").alias("v")), "v", "left_semi")
-            .select("u", "v")
-            .localCheckpoint()
-        )
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    return sym.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).alias("degree")
+    msgs = _messages(edges, src, dst).withColumn("ok", F.lit(True))
+
+    def survives(r: int, n: Column) -> Column:
+        # round 0 has no earlier peel: every node of the graph is alive
+        return F.lit(True) if r == 0 else n >= k
+
+    node = Window.partitionBy("x")
+    for r in range(rounds):
+        counted = msgs.select(
+            "x",
+            "y",
+            "ok",
+            F.count(F.lit(1)).over(node).alias("_n"),
+            F.count("ok").over(node).alias("_d"),
+        ).filter(survives(r, F.col("_n")) & F.col("ok").isNotNull())
+        msgs = _swap(counted, F.when(F.col("_d") >= k, True).alias("ok"))
+    return (
+        msgs.groupBy("x")
+        .agg(F.count(F.lit(1)).alias("_n"), F.count("ok").alias("degree"))
+        .filter(survives(rounds, F.col("_n")) & (F.col("degree") > 0))
+        .select(F.col("x").alias("node"), "degree")
     )
 
 

@@ -3,9 +3,11 @@ functions/sketches.py (cross-engine HLL)."""
 
 from __future__ import annotations
 
+import collections
 import itertools
 import math
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -293,6 +295,110 @@ def test_kcore_peels_tree_keeps_clique(spark):
     core = {r.node: r.degree for r in kcore_peel(df, k=3, rounds=4).collect()}
     assert set(core) == set(range(5))
     assert all(d == 4 for d in core.values())
+
+
+def _brute_kcore(pairs, k, rounds):
+    """Fixed-round peeling on the undirected simple graph: each round
+    drops the nodes with degree < k and every edge touching them."""
+    alive = {(min(u, v), max(u, v)) for u, v in pairs if u != v}
+    for _ in range(rounds):
+        deg = collections.Counter(n for e in alive for n in e)
+        alive = {(u, v) for u, v in alive if deg[u] >= k and deg[v] >= k}
+    return dict(collections.Counter(n for e in alive for n in e))
+
+
+def _brute_lpa(pairs, iterations):
+    """Synchronous LPA: every node takes its neighbors' most frequent
+    label, the smallest label on a tie."""
+    nbrs = collections.defaultdict(set)
+    for u, v in pairs:
+        if u != v:
+            nbrs[u].add(v)
+            nbrs[v].add(u)
+    label = {n: n for n in nbrs}
+    for _ in range(iterations):
+        votes = {n: collections.Counter(label[m] for m in ns)
+                 for n, ns in nbrs.items()}
+        label = {n: min(c, key=lambda lab: (-c[lab], lab))
+                 for n, c in votes.items()}
+    return label
+
+
+def _noisy_random_graph(spark, seed, n_nodes):
+    """A random edge list with self-loops and reversed duplicates."""
+    import pandas as pd
+
+    rng = random.Random(seed)
+    pairs = [(rng.randrange(n_nodes), rng.randrange(n_nodes))
+             for _ in range(3 * n_nodes)]
+    pairs += [(v, u) for u, v in pairs[:n_nodes]]
+    pairs += [(i, i) for i in range(0, n_nodes, 7)]
+    df = spark.createDataFrame(
+        pd.DataFrame(pairs, columns=["u", "v"]), "u long, v long"
+    )
+    return pairs, df
+
+
+def test_zero_rounds_return_the_input_state(spark):
+    """rounds=0 is the unpeeled degree of every node (a path's degrees
+    are all < k, so any peel would drop them), and iterations=0 labels
+    every node with itself."""
+    from spark_tensors_spark.operators.graph import (
+        kcore_peel,
+        label_propagation,
+    )
+
+    df = _edges_df(spark, [(0, 1), (1, 2), (2, 1), (3, 3)])
+    got = {r.node: r.degree for r in kcore_peel(df, k=3, rounds=0).collect()}
+    assert got == {0: 1, 1: 2, 2: 1}
+    labels = {r.node: r.label for r in label_propagation(df, 0).collect()}
+    assert labels == {0: 0, 1: 1, 2: 2}
+
+
+@pytest.mark.parametrize("rounds", [0, 1, 2, 4, 5])
+def test_kcore_and_lpa_match_brute_force_random(spark, rounds):
+    from spark_tensors_spark.operators.graph import (
+        kcore_peel,
+        label_propagation,
+    )
+
+    for seed, n_nodes in ((3, 14), (5, 40)):
+        pairs, df = _noisy_random_graph(spark, seed, n_nodes)
+        for k in (2, 3):
+            got = {r.node: r.degree
+                   for r in kcore_peel(df, k=k, rounds=rounds).collect()}
+            assert got == _brute_kcore(pairs, k, rounds), (seed, k)
+        got = {r.node: r.label
+               for r in label_propagation(df, rounds).collect()}
+        assert got == _brute_lpa(pairs, rounds), seed
+
+
+def test_kcore_and_lpa_rounds_are_one_exchange_each(spark):
+    """Each round is one hash exchange, with no barrier job and nothing
+    left persisted: k-core's plan holds the edge distinct, ``rounds``
+    round exchanges and the final degree count (r + 2); LPA's holds the
+    distinct and one exchange per iteration (n + 1)."""
+    from spark_tensors_spark.operators.graph import (
+        kcore_peel,
+        label_propagation,
+    )
+
+    _pairs, df = _noisy_random_graph(spark, 9, 30)
+    sc = spark.sparkContext._jsc.sc()
+    for build, n_exchanges in (
+        (lambda: kcore_peel(df, k=3, rounds=4), 4 + 2),
+        (lambda: label_propagation(df, 3), 3 + 1),
+    ):
+        persisted = sc.getPersistentRDDs().size()
+        out = build()
+        out.collect()
+        assert sc.getPersistentRDDs().size() == persisted
+        # the final adaptive plan; a reused exchange is not a new one
+        plan = out._jdf.queryExecution().executedPlan().executedPlan()
+        text = plan.toString()
+        exchanges = re.findall(r"^\W*Exchange hashpartitioning", text, re.M)
+        assert len(exchanges) == n_exchanges, text
+        assert "ExistingRDD" not in text, text
 
 
 def test_personalized_pagerank_localizes_to_seeds(spark):

@@ -6,7 +6,11 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from spark_tensors_spark.io.readers import read_ntriples, read_tsv_triples
+from spark_tensors_spark.io.readers import (
+    TABLES,
+    read_ntriples,
+    read_tsv_triples,
+)
 
 NT = """\
 <http://ex.org/a> <http://ex.org/knows> <http://ex.org/b> .
@@ -242,3 +246,41 @@ def test_load_table_normalizes_every_events_ts_layout(spark, tmp_path):
         )
         got[name] = [r["ts"] for r in df.orderBy("event_id").collect()]
     assert got["ntz_us"] == got["tz_us"] == got["nanos"], got
+
+
+@pytest.fixture(scope="module")
+def gen_scale_dir(tmp_path_factory):
+    """A small ``scripts/gen_scale.py`` output (sf0.0001-sized tables)."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO
+
+    out = tmp_path_factory.mktemp("gen_scale")
+    subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "gen_scale.py"),
+         "0.001", str(out)],
+        check=True, stdout=subprocess.DEVNULL, timeout=120,
+    )
+    return str(out)
+
+
+@pytest.mark.parametrize("name", [t for t in TABLES if t != "events"])
+def test_load_table_declared_schema_matches_files(spark, gen_scale_dir,
+                                                  name):
+    """Each declared table schema is exactly what Spark infers from the
+    shipped files and from gen_scale's, and a declared read runs no
+    Spark job (schema inference would run one)."""
+    import os
+
+    from spark_tensors_spark.io.readers import load_table
+    from tests.conftest import SF_SMOKE
+
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    for sf_dir in (SF_SMOKE, gen_scale_dir):
+        before = scheduler.nextJobId()
+        df = load_table(spark, sf_dir, name)
+        assert scheduler.nextJobId() == before, sf_dir
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        assert df.schema == spark.read.parquet(path).schema, sf_dir
